@@ -9,8 +9,9 @@ workload can check is checked, and the last line of standard output is one
 JSON object ``{"correct", "attempted", "failed", "metrics"}``. With
 ``--trace 0`` the metrics are the end-to-end ones; with ``--trace 1`` they
 are the per-layer ones, taken from spans, Spark job groups and the event
-log (see ``perfbench/README.md``). The full record of a run (host, input
-hash, samples, per-panel and per-query breakdown, spans) is written to
+log (see ``perfbench/README.md``). Inputs are generated into the run's own
+directory and removed with it. The full record of a run (host, input hash,
+samples, per-panel and per-query breakdown, spans) is written to
 ``perfbench/.work/results/``. The exit code is 0 only when every check
 passed.
 """
@@ -21,8 +22,8 @@ import argparse
 import json
 import os
 import shutil
-import subprocess
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -42,6 +43,9 @@ def _pin_environment(run_dir: str) -> int:
     os.makedirs(local, exist_ok=True)
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     os.environ["SPARK_LOCAL_DIRS"] = local
+    # A 4g driver heap instead of the engine's 8g default: with 8g, the
+    # heap still live after a full GC at the end of a dashboard run comes
+    # out at either about 240 or about 370 MB, which swamps retained_mb.
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "4g"
     os.environ["TMPDIR"] = tmp
     # no hsperfdata file under the system /tmp
@@ -60,31 +64,8 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
-def _untraced_reference(args: argparse.Namespace) -> dict:
-    """The untraced result of the same workload and seed, the baseline for
-    the tracing overhead: the record of an earlier untraced run in this
-    checkout when there is one, else a fresh untraced run in a child
-    process."""
-    record = os.path.join(WORK, "results", f"{args.workload}-seed{args.seed}-trace0.json")
-    if os.path.isfile(record):
-        with open(record) as f:
-            return json.load(f)["result"]
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--workload", args.workload,
-        "--seed", str(args.seed),
-        "--seconds", str(args.seconds),
-        "--trace", "0",
-    ]
-    proc = subprocess.run(cmd, cwd=ROOT, stdout=subprocess.PIPE, text=True, timeout=100)
-    lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-    if proc.returncode != 0 or not lines:
-        raise RuntimeError(f"untraced reference run failed (exit {proc.returncode})")
-    return json.loads(lines[-1])
-
-
 def main(argv: list[str]) -> int:
+    t_start = time.perf_counter()
     args = _parse(argv)
     if not os.path.isfile(os.path.join(ROOT, "network_iq_spark", "__init__.py")):
         print(
@@ -93,8 +74,6 @@ def main(argv: list[str]) -> int:
             file=sys.stderr,
         )
         return 2
-    reference = _untraced_reference(args) if args.trace else None
-
     run_dir = os.path.join(WORK, f"run-{args.workload}-{args.seed}-{args.trace}-{os.getpid()}")
     os.makedirs(run_dir, exist_ok=True)
     cpus = _pin_environment(run_dir)
@@ -109,12 +88,11 @@ def main(argv: list[str]) -> int:
             traced=bool(args.trace),
             cpus=cpus,
             run_dir=run_dir,
-            inputs_root=os.path.join(WORK, "inputs"),
         )
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
-    metrics = result.end_to_end() if not args.trace else result.per_layer(reference)
+    metrics = result.end_to_end() if not args.trace else result.per_layer()
     line = {
         "correct": result.failed == 0,
         "attempted": result.attempted,
@@ -126,7 +104,11 @@ def main(argv: list[str]) -> int:
         WORK, "results", f"{args.workload}-seed{args.seed}-trace{args.trace}.json"
     )
     with open(artifact, "w") as f:
-        json.dump({**result.record(), "result": line, "untraced_reference": reference}, f, indent=1)
+        json.dump(
+            {**result.record(), "wall_s": time.perf_counter() - t_start, "result": line},
+            f,
+            indent=1,
+        )
     print(f"perfbench: record written to {os.path.relpath(artifact, ROOT)}", file=sys.stderr)
     for msg in result.errors:
         print(f"perfbench: FAILED {msg}", file=sys.stderr)

@@ -12,7 +12,6 @@ from __future__ import annotations
 import json
 import os
 import platform
-import shutil
 import statistics
 import subprocess
 import time
@@ -153,12 +152,22 @@ def _jvm_pid(proc) -> int:
     return proc.pid
 
 
+def cpu_steal_s() -> float:
+    """Host-wide CPU time stolen by the hypervisor since boot, in seconds
+    (the ``steal`` column of the ``cpu`` line of ``/proc/stat``). Its rise
+    over a run shows a run slowed by other guests on the same machine."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK")
+
+
 def host_info(cpus: int) -> dict:
     return {
         "nproc": cpus,
         "platform": platform.platform(),
         "python": platform.python_version(),
         "loadavg_before": list(os.getloadavg()),
+        "cpu_steal_s_before": cpu_steal_s(),
     }
 
 
@@ -181,6 +190,7 @@ class Result:
         self.requests: list[tuple[str, float]] = []  # (name, latency) timed
         self.appends: list[float] = []
         self.rounds: list[float] = []  # cycle (dashboard) / pass (batch) times
+        self.untraced_rounds: list[float] = []  # tracer off, in a traced run
         self.breakdown: dict[str, dict[str, list[float]]] = defaultdict(
             lambda: defaultdict(list)
         )
@@ -281,13 +291,14 @@ class Result:
             "trace.hook_s": t.hook_s,
         }
 
-    def per_layer(self, untraced: dict) -> dict:
-        """Per-layer metrics; ``untraced`` is the result line of an untraced
-        run of the same workload and seed, for the tracing overhead."""
+    def tracing_overhead_s(self) -> float:
+        """Mean round time with the tracer on minus mean round time with it
+        off, over the paired rounds of one traced run (see ``timed_rounds``)."""
+        return statistics.mean(self.rounds) - statistics.mean(self.untraced_rounds)
+
+    def per_layer(self) -> dict:
         vals = self.layer_metrics()
-        vals["trace.overhead_s"] = (
-            self.end_to_end()["batch_s"]["value"] - untraced["metrics"]["batch_s"]["value"]
-        )
+        vals["trace.overhead_s"] = self.tracing_overhead_s()
         return {name: {"value": vals[name], "unit": u} for name, u in PER_LAYER.items()}
 
     def record(self) -> dict:
@@ -310,6 +321,7 @@ class Result:
             "appends_s": self.appends,
             "append_p50_s": statistics.median(self.appends) if self.appends else None,
             "rounds_s": self.rounds,
+            "untraced_rounds_s": self.untraced_rounds,
             "breakdown": {k: dict(v) for k, v in self.breakdown.items()},
             "peak_rss_mb": self.peak_rss_mb,
             "retained_parts_mb": self.retained_parts_mb,
@@ -442,18 +454,46 @@ class Session:
 # not set a run's figures alone.
 MIN_ROUNDS = 2
 
+# Tracer state per round in a traced run: off, on, on, off. Each block
+# pairs traced with untraced rounds symmetrically in time, so a steady
+# drift of the host's speed cancels out of their difference.
+TRACE_BLOCK = (False, True, True, False)
 
-def timed_rounds(res: Result, seconds: float, one_round: Callable[[], None]) -> None:
+
+def timed_rounds(res: Result, seconds: float, one_round: Callable[[], None],
+                 tr: Tracer) -> None:
     """The timed region: whole rounds (a dashboard cycle, a batch pass),
     at least ``MIN_ROUNDS``, and another only while it is expected to end
-    within ``seconds`` of the start."""
+    within ``seconds`` of the start.
+
+    In a traced run the rounds come in ``TRACE_BLOCK`` blocks, with the
+    tracer switched off for the untraced ones: traced rounds go to
+    ``res.rounds`` and feed the per-layer metrics, untraced ones go to
+    ``res.untraced_rounds``, and the two give the tracing overhead. Each
+    half gets ``seconds``; another block starts only while it is expected
+    to end within ``2 * seconds`` of the start.
+    """
     start = clock()
-    while True:
-        t0 = clock()
-        one_round()
-        res.rounds.append(clock() - t0)
-        if len(res.rounds) >= MIN_ROUNDS and clock() - start + res.rounds[-1] > seconds:
-            return
+    if not tr.enabled:
+        while True:
+            t0 = clock()
+            one_round()
+            res.rounds.append(clock() - t0)
+            if len(res.rounds) >= MIN_ROUNDS and clock() - start + res.rounds[-1] > seconds:
+                return
+    try:
+        while True:
+            t_block = clock()
+            for on in TRACE_BLOCK:
+                tr.enabled = on
+                t0 = clock()
+                one_round()
+                (res.rounds if on else res.untraced_rounds).append(clock() - t0)
+            block = clock() - t_block
+            if clock() - start + block > 2 * seconds:
+                return
+    finally:
+        tr.enabled = True
 
 
 # ---------------------------------------------------------------------------
@@ -461,18 +501,9 @@ def timed_rounds(res: Result, seconds: float, one_round: Callable[[], None]) -> 
 # ---------------------------------------------------------------------------
 
 
-def _materialize(inputs_root: str, key: str, build: Callable[[str], None]) -> str:
-    """Generated inputs live in ``inputs_root/key``, built once per seed
-    (the generators are deterministic) and moved into place atomically."""
-    final = os.path.join(inputs_root, key)
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp{os.getpid()}"
-        build(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:  # another run got there first
-            shutil.rmtree(tmp, ignore_errors=True)
-    return final
+# Inputs are generated afresh into each run's directory (untimed; a few
+# seconds at most), so a run never reads files another version of the
+# generator made.
 
 
 def _dashboard_inputs(seed: int, out: str) -> None:
@@ -520,12 +551,13 @@ def _count_files(root: str) -> int:
 
 
 def run_dashboard(res: Result, sess: Session, tr: Tracer, seed: int, seconds: float,
-                  run_dir: str, inputs_root: str) -> None:
+                  run_dir: str) -> None:
     from network_iq_spark import plans
     from network_iq_spark.ingest import ingest, read_csv, read_curated, telemetry_schema
     from network_iq_spark.ml import derive_labels, score_with_model, train_next_hour
 
-    data = _materialize(inputs_root, f"dashboard-{seed}", lambda d: _dashboard_inputs(seed, d))
+    data = os.path.join(run_dir, "inputs")
+    _dashboard_inputs(seed, data)
     res.input_hash = gen.digest(data)
     with open(os.path.join(data, "clean_rows.json")) as f:
         clean = json.load(f)
@@ -534,12 +566,12 @@ def run_dashboard(res: Result, sess: Session, tr: Tracer, seed: int, seconds: fl
     curated = os.path.join(run_dir, "curated")
     schema = telemetry_schema()
     state = {"expected": 0, "next_append": 0, "model": None}
-    traced = tr.enabled
 
     def append() -> None:
         if state["next_append"] >= len(appends):
             raise RuntimeError("out of generated hourly batches; lower --seconds")
         rel = appends[state["next_append"]]
+        traced = tr.enabled
         before = _count_files(curated) if traced else 0
         with tr.span("ingest", "append"):
             ingest(read_csv(spark, os.path.join(data, rel), schema), curated, mode="append")
@@ -549,7 +581,7 @@ def run_dashboard(res: Result, sess: Session, tr: Tracer, seed: int, seconds: fl
         state["expected"] += clean[rel]
 
     def read():
-        if traced:
+        if tr.enabled:
             res.files_scanned.append(_count_files(curated))
         with tr.span("sources", "read_curated"):
             return read_curated(spark, curated)
@@ -626,7 +658,7 @@ def run_dashboard(res: Result, sess: Session, tr: Tracer, seed: int, seconds: fl
                  "warmup_s": t4 - t3}
     res.setup_s = t4 - t0
 
-    timed_rounds(res, seconds, lambda: cycle(True))
+    timed_rounds(res, seconds, lambda: cycle(True), tr)
 
 
 # ---------------------------------------------------------------------------
@@ -635,14 +667,13 @@ def run_dashboard(res: Result, sess: Session, tr: Tracer, seed: int, seconds: fl
 
 
 def run_batch(res: Result, sess: Session, tr: Tracer, workload: str, seed: int,
-              seconds: float, run_dir: str, inputs_root: str) -> None:
+              seconds: float, run_dir: str) -> None:
     from network_iq_spark.registry import ORACLES, QUERIES
     from network_iq_spark.sources import load_table
 
     tables, names = BATCH[workload]
-    data = _materialize(
-        inputs_root, f"{workload}-{seed}", lambda d: _batch_inputs(workload, seed, d)
-    )
+    data = os.path.join(run_dir, "inputs")
+    _batch_inputs(workload, seed, data)
     res.input_hash = gen.digest(data)
     res.files_scanned.append(len(tables))
 
@@ -691,18 +722,24 @@ def run_batch(res: Result, sess: Session, tr: Tracer, workload: str, seed: int,
         for n in names:
             res.attempt(n, lambda n=n: query(n, True, False))
 
-    timed_rounds(res, seconds, one_pass)
+    timed_rounds(res, seconds, one_pass, tr)
+
+    # -- one more pass after the timed ones, collected (untimed): state a
+    # pass leaves behind (checkpoints, cached plans or tables) must not
+    # change the next pass's rows
+    last = {n: res.attempt(n, lambda n=n: query(n, False, True)) for n in names}
 
     # -- oracle checks (untimed) --------------------------------------------
     con = oracle.connect(data, list(tables))
-    for n in names:
-        if warm.get(n) is None:
-            continue
-        cols, rows = warm[n]
-        if n in ORACLES:
-            res.check(f"{n} oracle", oracle.compare(con, ORACLES[n], cols, rows))
-        else:
-            res.check(f"{n} non-empty", None if rows else "no rows")
+    for label, collected in (("first pass", warm), ("pass after the timed ones", last)):
+        for n in names:
+            if collected.get(n) is None:
+                continue
+            cols, rows = collected[n]
+            if n in ORACLES:
+                res.check(f"{n} oracle, {label}", oracle.compare(con, ORACLES[n], cols, rows))
+            else:
+                res.check(f"{n} non-empty, {label}", None if rows else "no rows")
     con.close()
 
 
@@ -710,18 +747,19 @@ def run_batch(res: Result, sess: Session, tr: Tracer, workload: str, seed: int,
 
 
 def run(workload: str, *, seed: int, seconds: float, traced: bool, cpus: int,
-        run_dir: str, inputs_root: str) -> Result:
+        run_dir: str) -> Result:
     res = Result(workload, seed, seconds, host_info(cpus))
     tr = Tracer(traced)
     res.tracer = tr if traced else None
     sess = Session(run_dir, traced, res)
     try:
         if workload == "dashboard":
-            run_dashboard(res, sess, tr, seed, seconds, run_dir, inputs_root)
+            run_dashboard(res, sess, tr, seed, seconds, run_dir)
         else:
-            run_batch(res, sess, tr, workload, seed, seconds, run_dir, inputs_root)
+            run_batch(res, sess, tr, workload, seed, seconds, run_dir)
     finally:
         if sess.spark is not None:
             sess.stop(tr)
     res.host["loadavg_after"] = list(os.getloadavg())
+    res.host["cpu_steal_s_after"] = cpu_steal_s()
     return res

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 
 def connected_components(
-    vertices: DataFrame | None,
+    vertices: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
     src: str = "src",
@@ -40,28 +40,57 @@ def connected_components(
 ) -> DataFrame:
     """(id → cluster_id) where cluster_id = min vertex id of the component.
 
-    ``vertices``: one row per vertex (isolated vertices become singleton
-    clusters), or ``None`` for ENDPOINTS-ONLY mode: the vertex set is
-    exactly the edge endpoints.
-
-    .. warning:: ``None`` SILENTLY DROPS ISOLATED VERTICES — a vertex
-       that appears in no edge produces no output row. Pass ``None``
-       ONLY when the true vertex set IS the endpoint set; whenever
-       isolated vertices must surface as singleton clusters (every
-       corpus-wide dedup caller), pass the explicit frame. There is no
-       runtime guard — the operator cannot see vertices it was never
-       given — so this contract lives here and in the call sites.
-
-    Callers whose vertex frame is itself derived from the edges
-    (union + distinct — the resolution-family tails) should pass
-    ``None``: the seed's neighbor-min aggregate already keys on every
-    endpoint (``sym`` is symmetrized, so every endpoint appears as
-    ``u``), making the caller's distinct exchange and the seed's left
-    join pure redundancy (guide §2.4 — remove shuffles outright).
-    Identical labeling whenever the explicit frame equals the endpoint
-    set. ``edges``: undirected pairs. Raises after ``max_iter``
-    non-converged rounds rather than returning a partial labeling.
+    ``vertices``: one row per vertex; isolated vertices become singleton
+    clusters. ``edges``: undirected pairs. When the vertex set is exactly
+    the edge endpoints, use :func:`connected_components_of_edges`. Raises
+    after ``max_iter`` non-converged rounds rather than returning a
+    partial labeling.
     """
+    sym, nbr_min = _symmetrize_and_seed(edges, src, dst)
+    labels = (
+        vertices.select(F.col(id_col).alias("u"))
+        .join(nbr_min, "u", "left")
+        .select(
+            "u",
+            F.least(
+                F.col("u"), F.coalesce(F.col("__nv__"), F.col("u"))
+            ).alias("label"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    return _propagate(sym, labels, id_col, max_iter)
+
+
+def connected_components_of_edges(
+    edges: DataFrame,
+    id_col: str = "id",
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = 50,
+) -> DataFrame:
+    """:func:`connected_components` over exactly the edge endpoints: one
+    output row per vertex that appears in some edge.
+
+    For callers whose vertex frame would itself be derived from the edges
+    (union + distinct — the resolution-family tails). The seed's
+    neighbor-min aggregate already keys on every endpoint (``sym`` is
+    symmetrized, so every endpoint appears as ``u``), which makes a
+    distinct exchange and a seed join pure redundancy (guide §2.4 —
+    remove shuffles outright). Same labeling as passing the endpoint set
+    to :func:`connected_components`.
+    """
+    sym, nbr_min = _symmetrize_and_seed(edges, src, dst)
+    # nbr_min's key set IS the vertex set, so seed directly — no distinct,
+    # no join, and every __nv__ is non-null by construction
+    labels = nbr_min.select(
+        "u", F.least(F.col("u"), F.col("__nv__")).alias("label")
+    ).localCheckpoint(eager=False)
+    return _propagate(sym, labels, id_col, max_iter)
+
+
+def _symmetrize_and_seed(edges: DataFrame, src: str, dst: str):
+    """(sym, nbr_min): the symmetrized, checkpointed edges (u, v) and the
+    per-vertex minimum neighbor id (u, __nv__) that seeds the labels."""
     # materialize the symmetrized edges ONCE — edges is often an expensive
     # pipeline (e.g. the MinHash cascade) and every round joins against it;
     # without this the lineage re-executes that pipeline per round. LAZY
@@ -88,26 +117,13 @@ def connected_components(
     # cannot change the result (guide §2.4: remove work the loop
     # re-derives).
     nbr_min = sym.groupBy("u").agg(F.min("v").alias("__nv__"))
-    if vertices is None:
-        # endpoints-only: nbr_min's key set IS the vertex set (sym is
-        # symmetrized), so seed directly — no distinct, no join, and
-        # every __nv__ is non-null by construction
-        labels = nbr_min.select(
-            "u", F.least(F.col("u"), F.col("__nv__")).alias("label")
-        ).localCheckpoint(eager=False)
-    else:
-        labels = (
-            vertices.select(F.col(id_col).alias("u"))
-            .join(nbr_min, "u", "left")
-            .select(
-                "u",
-                F.least(
-                    F.col("u"), F.coalesce(F.col("__nv__"), F.col("u"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    return sym, nbr_min
 
+
+def _propagate(
+    sym: DataFrame, labels: DataFrame, id_col: str, max_iter: int
+) -> DataFrame:
+    """Min-label rounds from the seeded (u, label) frame to the fixpoint."""
     # Convergence via the MONOTONE INVARIANT instead of an old-vs-new join
     # (r14, guide §2.4 remove shuffles outright / §1.2 fewer passes): each
     # round takes a per-vertex min with the previous round's label, so
@@ -147,7 +163,7 @@ def connected_components(
                 F.col("u").alias(id_col), F.col("label").alias("cluster_id")
             )
         prev = cur
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    raise RuntimeError(f"connected components: no fixpoint in {max_iter} rounds")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

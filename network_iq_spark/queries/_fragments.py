@@ -210,6 +210,14 @@ def _int_sig_ctes(n_tables: int, n_planes: int) -> str:
 _IVFD_CELLS, _IVFD_GROUPS, _IVFD_NPROBE, _IVFD_K = 16, 4, 4, 10
 _IVFD_SCALE = "1000000.0"
 
+# 8-bit pixel quantization of an embedding, DuckDB side: the media image
+# tiers and the integer IVF recenter oracle all read this one definition
+# (the Spark twin is media._IMG_QUANT_TEMPLATE)
+_IMG_QUANT_SQL = (
+    "list_transform(embedding::DOUBLE[], x -> CAST(floor("
+    "((least(greatest(x, -1.0), 1.0)) + 1.0) / 2.0 * 255.0 + 0.5) AS BIGINT))"
+)
+
 
 _SPLIT_SALT = "v1"
 _SPLIT_HEX = _sql_hex_int(f"md5(CAST(doc_id AS VARCHAR) || '{_SPLIT_SALT}')", 12)

@@ -6,7 +6,9 @@ cross-modality census. Split out of llmdata.py in r10.
 
 from __future__ import annotations
 
+import math
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -14,6 +16,13 @@ from pyspark.sql import functions as F
 from network_iq_spark.operators import dedup as D
 from network_iq_spark.operators import ensure_parallelism
 from network_iq_spark.operators import multimodal as M
+from network_iq_spark.operators.gif import encode_gif
+from network_iq_spark.operators.jpeg import (
+    encode_jpeg_gray,
+    encode_jpeg_progressive,
+    encode_jpeg_ycbcr,
+)
+from network_iq_spark.queries._fragments import _IMG_QUANT_SQL
 from network_iq_spark.registry import register
 from network_iq_spark.sources import load_table
 
@@ -66,43 +75,184 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.extract_features(M.documents_as_media(docs)).orderBy("media_id")
 
 
-_IMG_SIDE, _IMG_OUT = 8, 4  # 64-dim embedding -> 8x8 gray -> 4x4 resize
-# center-aligned nearest-neighbor survivors: floor((i+0.5)*8/4) = 2i+1
-# -> rows/cols {1,3,5,7}; DuckDB list indexing is 1-based
-_IMG_KEEP_1BASED = [
-    _IMG_SIDE * r + c + 1
-    for r in (1, 3, 5, 7)
-    for c in (1, 3, 5, 7)
-]
-_IMG_QUANT_SQL = (
-    "list_transform(embedding::DOUBLE[], x -> CAST(floor("
-    "((least(greatest(x, -1.0), 1.0)) + 1.0) / 2.0 * 255.0 + 0.5) AS BIGINT))"
-)
+_IMG_SIDE = 8  # 64-dim embedding -> 8x8 gray grid
 # Spark twin of _IMG_QUANT_SQL — the ONE definition of the 8-bit pixel
 # quantization every image tier shares (r11 review: the expr literal had
 # drifted into ten call sites; a rounding-rule change must hit both
-# engines in exactly one place each)
-_IMG_QUANT_EXPR_SQL = (
-    "transform(embedding, x -> cast(floor(((least(greatest("
+# engines in exactly one place each). The placeholder is the array to
+# quantize: the whole embedding, or a leading slice of it.
+_IMG_QUANT_TEMPLATE = (
+    "transform({}, x -> cast(floor(((least(greatest("
     "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
     ") as int))"
 )
+_IMG_QUANT_EXPR_SQL = _IMG_QUANT_TEMPLATE.format("embedding")
 
 
-@register(
-    "decoded_image_stats",
-    oracle=f"""
+def _media_frame(
+    src: DataFrame,
+    encode: Callable,
+    media_type: str,
+    side: int,
+    duration_ms: int | None = None,
+) -> DataFrame:
+    """(media_id, px) → the 6-column media schema. ``encode(px, media_id)``
+    turns one row's pixels (a flat uint8 array) into the payload bytes;
+    the type, the square geometry and the duration are the same for
+    every row."""
+    import numpy as np
+    import pandas as pd
+
+    def build(it):
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "payload": [
+                        encode(np.asarray(list(p), dtype=np.uint8), vid)
+                        for vid, p in zip(pdf["media_id"], pdf["px"])
+                    ],
+                    "media_type": media_type,
+                    "width": np.int32(side),
+                    "height": np.int32(side),
+                    "duration_ms": pd.array(
+                        [duration_ms] * len(pdf), dtype="Int32"
+                    ),
+                }
+            )
+
+    return src.mapInPandas(
+        build,
+        schema="media_id bigint, payload binary, media_type string, "
+        "width int, height int, duration_ms int",
+    )
+
+
+def _neutral_chroma(y):
+    """Y plane → YCbCr with Cb = Cr = 128. The color transform is then
+    exact (R = G = B = Y), so a color JPEG of constant blocks round-trips
+    bit-exactly."""
+    import numpy as np
+
+    return np.stack([y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1)
+
+
+class _ImgCodec(NamedTuple):
+    """One row of the decoded-image codec family (see :func:`_codec_stats`)."""
+
+    encode: Callable  # (uint8 grid, media_id) -> payload bytes
+    dims: int  # leading embedding dims, quantized into a square grid
+    upscale: int  # each grid cell becomes an upscale x upscale constant block
+    out: int  # resize_media output side
+    channels: int  # 1 (gray) or 3 (RGB) after decode
+    # ensure_parallelism before the codec stage: heavy codecs (>=1 ms/row)
+    # gain more from spreading than the exchange costs (A/B-measured r12;
+    # light decoders keep the scan partitioning). Identity at real scale
+    # (ensure_parallelism docstring).
+    spread: bool
+
+
+_IMG_CODECS = {
+    "image": _ImgCodec(lambda g, _id: M.encode_pnm(g), 64, 1, 4, 1, False),
+    "png": _ImgCodec(lambda g, _id: M.encode_png(g), 64, 1, 2, 1, False),
+    "jpeg": _ImgCodec(
+        lambda g, _id: encode_jpeg_gray(g, restart_interval=2), 4, 8, 2, 1, False
+    ),
+    "jpeg420": _ImgCodec(
+        lambda g, _id: encode_jpeg_ycbcr(_neutral_chroma(g), restart_interval=2),
+        4, 16, 2, 3, True,
+    ),
+    "jpeg_prog": _ImgCodec(
+        lambda g, _id: encode_jpeg_progressive(
+            _neutral_chroma(g), restart_interval=2
+        ),
+        4, 16, 2, 3, True,
+    ),
+    "gif": _ImgCodec(
+        lambda g, media_id: encode_gif(g, interlace=bool(int(media_id) % 2)),
+        4, 16, 2, 3, True,
+    ),
+}
+
+
+def _codec_stats_oracle(codec: str) -> str:
+    """DuckDB replay of :func:`_codec_stats` that never decodes an image.
+    The center-aligned nearest-neighbor resample keeps source position
+    floor((i + 0.5) · n / out) of an n-wide image. For a k-cell grid
+    upscaled u times (n = k·u), floor(floor(x) / u) = floor(x / u) puts
+    that position in cell floor((i + 0.5) · k / out), so the survivors
+    are read straight from the quantized dims. Gray-on-RGB decodes count
+    each survivor once per channel."""
+    c = _IMG_CODECS[codec]
+    k = math.isqrt(c.dims)
+    keep = [(2 * i + 1) * k // (2 * c.out) for i in range(c.out)]
+    cells = " + ".join(f"px[{k * r + col + 1}]" for r in keep for col in keep)
+    px_sum = f"{c.channels} * ({cells})"
+    return f"""
     WITH q AS (
       SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
     )
     SELECT media_id,
-           {_IMG_OUT} AS out_w, {_IMG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _IMG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _IMG_KEEP_1BASED)}) AS DOUBLE)
-             / {_IMG_OUT * _IMG_OUT}.0 AS px_mean
+           {c.out} AS out_w, {c.out} AS out_h,
+           {px_sum} AS px_sum,
+           CAST({px_sum} AS DOUBLE) / {c.out * c.out * c.channels}.0 AS px_mean
     FROM q ORDER BY media_id
-    """,
-)
+    """
+
+
+def _codec_stats(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
+    """The shared decoded-image pipeline: quantize the codec's leading
+    embedding dims to a k×k uint8 grid, upscale it into constant blocks,
+    encode, push the payloads through resize_media's decode →
+    center-aligned nearest-neighbor resample → PNM re-encode, and decode
+    the OUTPUT bytes again for (out_w, out_h, px_sum, px_mean). MAP-ONLY
+    before the final sort."""
+    import numpy as np
+    import pandas as pd
+
+    from network_iq_spark.operators.multimodal import decode_image
+
+    c = _IMG_CODECS[codec]
+    k = math.isqrt(c.dims)
+    arr = "embedding" if c.dims == _IMG_SIDE * _IMG_SIDE else (
+        f"slice(embedding, 1, {c.dims})"
+    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = F.expr(_IMG_QUANT_TEMPLATE.format(arr))
+    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    if c.spread:
+        src = ensure_parallelism(src)
+    block = np.ones((c.upscale, c.upscale), dtype=np.uint8)
+
+    def encode(px, media_id):
+        return c.encode(np.kron(px.reshape(k, k), block), media_id)
+
+    media = _media_frame(src, encode, "image", k * c.upscale)
+    resized = M.resize_media(media, c.out, c.out)
+    n_out = c.out * c.out * c.channels
+
+    def stats(it):
+        for pdf in it:
+            imgs = [decode_image(bytes(p)) for p in pdf["payload"]]
+            sums = [int(img.sum()) for img in imgs]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "out_w": pd.array([i.shape[1] for i in imgs], dtype="int32"),
+                    "out_h": pd.array([i.shape[0] for i in imgs], dtype="int32"),
+                    "px_sum": pd.array(sums, dtype="int64"),
+                    "px_mean": [s / n_out for s in sums],
+                }
+            )
+
+    return resized.mapInPandas(
+        stats,
+        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
+        "px_mean double",
+    ).orderBy("media_id")
+
+
+@register("decoded_image_stats", oracle=_codec_stats_oracle("image"))
 def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, end to end and hash-checked: each embedding is
     quantized to 8-bit pixels (Spark expressions — both engines evaluate
@@ -114,93 +264,10 @@ def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 surviving pixel positions directly, so any defect in the codec,
     the resample index math, or the re-encode shows up as a hash
     mismatch. All stages MAP-ONLY (zero shuffles before the final sort)."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.multimodal import decode_image, encode_pnm
-
-    side = _IMG_SIDE
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_pnm(
-                            np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _IMG_OUT, _IMG_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_IMG_OUT * _IMG_OUT) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "image")
 
 
-_PNG_OUT = 2
-# center-aligned nearest-neighbor survivors for 8 -> 2: floor((i+0.5)*8/2)
-# -> rows/cols {2, 6}; DuckDB list indexing is 1-based
-_PNG_KEEP_1BASED = [_IMG_SIDE * r + c + 1 for r in (2, 6) for c in (2, 6)]
-
-_JPEG_BLOCKS = 2  # 2x2 grid of constant 8x8 blocks -> 16x16 image
-_JPEG_OUT = 2
-# survivors for 16 -> 2: floor((i+0.5)*16/2) -> rows/cols {4, 12}; pixel
-# (4,4) lands in block (0,0), (4,12) in (0,1), ... — i.e. the resample
-# picks exactly the 4 block constants, which are embedding dims 1..4
-_JPEG_KEEP_1BASED = [1, 2, 3, 4]
-
-
-@register(
-    "decoded_png_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_PNG_OUT} AS out_w, {_PNG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _PNG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _PNG_KEEP_1BASED)}) AS DOUBLE)
-             / {_PNG_OUT * _PNG_OUT}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_png_stats", oracle=_codec_stats_oracle("png"))
 def q_decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG sibling of `decoded_image_stats` — same decode → resample →
     re-encode pipeline, but the input payloads are REAL PNG files
@@ -212,64 +279,7 @@ def q_decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a defect anywhere in the codec (CRC layout, filter math, alpha
     handling) or the resample surfaces as a hash mismatch. MAP-ONLY
     before the final sort."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.multimodal import decode_image, encode_png
-
-    side = _IMG_SIDE
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_png(
-                            np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _PNG_OUT, _PNG_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_PNG_OUT * _PNG_OUT) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "png")
 
 
 # Image near-dup fixture: every {_DHASH_TWIN_EVERY}th image gets a planted
@@ -1056,20 +1066,7 @@ def q_incremental_image_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     ).orderBy("new_id", "old_id")
 
 
-@register(
-    "decoded_jpeg_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_JPEG_OUT} AS out_w, {_JPEG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _JPEG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _JPEG_KEEP_1BASED)}) AS DOUBLE)
-             / {_JPEG_OUT * _JPEG_OUT}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_jpeg_stats", oracle=_codec_stats_oracle("jpeg"))
 def q_decoded_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-JPEG sibling of `decoded_image_stats`: embedding dims 1–4
     become the constants of a 2×2 grid of 8×8 blocks (16×16 gray image),
@@ -1084,99 +1081,10 @@ def q_decoded_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same values straight from the embedding dims. Any defect in the
     Huffman tables, bitstream, DC prediction, restart handling, or IDCT
     shifts a constant and breaks the hash. MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.jpeg import encode_jpeg_gray
-    from network_iq_spark.operators.multimodal import decode_image
-
-    side = _JPEG_BLOCKS * 8
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-    def build(it):
-        ones = np.ones((8, 8), dtype=np.uint8)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_jpeg_gray(
-                            np.kron(
-                                np.asarray(list(p), dtype=np.uint8).reshape(
-                                    _JPEG_BLOCKS, _JPEG_BLOCKS
-                                ),
-                                ones,
-                            ),
-                            restart_interval=2,
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _JPEG_OUT, _JPEG_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_JPEG_OUT * _JPEG_OUT) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "jpeg")
 
 
-_J420_MCUS = 2  # 2x2 grid of constant 16x16 MCUs -> 32x32 color image
-_J420_OUT = 2
-# survivors for 32 -> 2: floor((i+0.5)*32/2) -> rows/cols {8, 24}; pixel
-# (8,8) lands in MCU (0,0), (8,24) in (0,1), ... — the resample picks the
-# 4 MCU luma constants, and with neutral chroma R=G=B=Y so each counts 3×
-
-
-@register(
-    "decoded_jpeg420_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_jpeg420_stats", oracle=_codec_stats_oracle("jpeg420"))
 def q_decoded_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:0 chroma-subsampled JPEG — the dominant format of real crawled
     corpora (VERDICT r7 top-next; previously these files fell to the
@@ -1197,97 +1105,10 @@ def q_decoded_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling-factor parse, MCU block order, chroma upsample, restart
     handling, or color transform shifts a value and breaks the hash.
     MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.jpeg import encode_jpeg_ycbcr
-    from network_iq_spark.operators.multimodal import decode_image
-
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for p in pdf["px"]:
-                y = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                ycc = np.stack(
-                    [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                )
-                payloads.append(encode_jpeg_ycbcr(ycc, restart_interval=2))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "jpeg420")
 
 
-@register(
-    "decoded_jpeg_prog_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_jpeg_prog_stats", oracle=_codec_stats_oracle("jpeg_prog"))
 def q_decoded_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) 4:2:0 JPEG decode at scale — the multi-scan
     half of the real-corpus format pair (VERDICT r7 item 1's remaining
@@ -1303,97 +1124,10 @@ def q_decoded_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle as the baseline-420 twin hash-replays it: any defect
     in scan sequencing, refinement bit order, or EOB-run accounting
     shifts a pixel and breaks the hash. MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.jpeg import encode_jpeg_progressive
-    from network_iq_spark.operators.multimodal import decode_image
-
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for p in pdf["px"]:
-                y = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                ycc = np.stack(
-                    [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                )
-                payloads.append(encode_jpeg_progressive(ycc, restart_interval=2))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "jpeg_prog")
 
 
-@register(
-    "decoded_gif_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_gif_stats", oracle=_codec_stats_oracle("gif"))
 def q_decoded_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF (LZW) decode at scale — the third real crawl format after
     PNG and JPEG. Embedding dims 1–4 become a 2×2 grid of constant 16×16
@@ -1406,78 +1140,7 @@ def q_decoded_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels directly — a defect in LZW table growth, sub-block framing,
     palette indexing, or interlace reordering shifts a value and breaks
     the hash. MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.gif import encode_gif
-    from network_iq_spark.operators.multimodal import decode_image
-
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for vid, p in zip(pdf["media_id"], pdf["px"]):
-                g = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                payloads.append(encode_gif(g, interlace=bool(int(vid) % 2)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
+    return _codec_stats(spark, sf_dir, "gif")
 
 
 @register(
@@ -1527,12 +1190,6 @@ def q_media_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from network_iq_spark.operators.gif import encode_gif
-    from network_iq_spark.operators.jpeg import (
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-        encode_jpeg_ycbcr,
-    )
     from network_iq_spark.operators.multimodal import (
         encode_png,
         encode_pnm,
@@ -1540,11 +1197,7 @@ def q_media_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
+    quant = F.expr(_IMG_QUANT_TEMPLATE.format("slice(embedding, 1, 4)"))
     src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
 
     def build(it):
@@ -1562,17 +1215,11 @@ def q_media_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     payloads.append(encode_jpeg_gray(np.kron(g, ones8)))
                     declared.append("jpeg")
                 elif fi == 2:
-                    y = np.kron(g, ones16)
-                    ycc = np.stack(
-                        [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                    )
+                    ycc = _neutral_chroma(np.kron(g, ones16))
                     payloads.append(encode_jpeg_ycbcr(ycc))
                     declared.append("jpeg")
                 elif fi == 3:
-                    y = np.kron(g, ones16)
-                    ycc = np.stack(
-                        [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                    )
+                    ycc = _neutral_chroma(np.kron(g, ones16))
                     payloads.append(encode_jpeg_progressive(ycc))
                     declared.append("jpeg")
                 elif fi == 4:
@@ -2126,7 +1773,6 @@ def q_decoded_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the timestamp math selects, so any defect in the Y4M header/FRAME
     walk, the ts→frame mapping, or the luma extraction breaks the hash.
     Bounded explode + maps only before the final sort."""
-    import numpy as np
     import pandas as pd
 
     from network_iq_spark.operators.multimodal import decode_image
@@ -2135,35 +1781,14 @@ def q_decoded_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     quant = F.expr(_IMG_QUANT_EXPR_SQL)
     src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    dur = _VID_FRAMES * 1000 // _VID_FPS
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_y4m(
-                            list(
-                                np.asarray(list(p), dtype=np.uint8).reshape(
-                                    _VID_FRAMES, _VID_SIDE, _VID_SIDE
-                                )
-                            ),
-                            fps=(_VID_FPS, 1),
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "video",
-                    "width": np.int32(_VID_SIDE),
-                    "height": np.int32(_VID_SIDE),
-                    "duration_ms": np.int32(dur),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
+    media = _media_frame(
+        src,
+        lambda px, _id: encode_y4m(
+            list(px.reshape(_VID_FRAMES, _VID_SIDE, _VID_SIDE)), fps=(_VID_FPS, 1)
+        ),
+        "video",
+        _VID_SIDE,
+        duration_ms=_VID_FRAMES * 1000 // _VID_FPS,
     )
     sampled = M.sample_frames(media, every_ms=1000, max_frames=32)
 
@@ -3803,15 +3428,15 @@ def _resolution_from_edges(e: DataFrame) -> DataFrame:
     over ONLY the duplicate-involved vertices → one row per cluster
     (keep_id, n_members, n_axes, n_dropped). The edge union is
     checkpointed once and feeds both the CC and the axis rollup; the
-    vertex set is exactly the edge endpoints, so the CC runs in
-    endpoints-only mode (vertices=None) — the former union + distinct +
-    seed join was redundant with the CC seed's own neighbor-min
-    aggregate (guide §2.4)."""
+    vertex set is exactly the edge endpoints, so the CC runs over the
+    edges alone (connected_components_of_edges) — the former union +
+    distinct + seed join was redundant with the CC seed's own
+    neighbor-min aggregate (guide §2.4)."""
     from network_iq_spark.operators import graph as G
 
     e = e.localCheckpoint(eager=False)
-    cc = G.connected_components(
-        None, e, id_col="media_id", src="src", dst="dst"
+    cc = G.connected_components_of_edges(
+        e, id_col="media_id", src="src", dst="dst"
     )
     stats = cc.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("n_members")
@@ -4037,11 +3662,11 @@ def _keep_best_from_edges(e: DataFrame, members: DataFrame) -> DataFrame:
     )
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = pool.submit(inheritable_thread_target(scored_plan.localCheckpoint))
-        # endpoints-only CC (vertices=None): the vertex set is exactly the
-        # edge endpoints, so the former union + distinct + seed join was
-        # redundant with the CC seed's neighbor-min aggregate (guide §2.4)
-        cc = G.connected_components(
-            None, e, id_col="media_id", src="src", dst="dst"
+        # the vertex set is exactly the edge endpoints, so the former
+        # union + distinct + seed join was redundant with the CC seed's
+        # neighbor-min aggregate (guide §2.4)
+        cc = G.connected_components_of_edges(
+            e, id_col="media_id", src="src", dst="dst"
         )
         scored = fut.result()
     stats = cc.groupBy("cluster_id").agg(

@@ -18,6 +18,7 @@ from network_iq_spark.queries._fragments import (  # noqa: F401
     _IVFD_K,
     _IVFD_NPROBE,
     _IVFD_SCALE,
+    _IMG_QUANT_SQL,
     _int_sig_ctes,
     _sql_hex_int,
 )
@@ -428,20 +429,13 @@ _RECENTER_D2 = (
     "list_sum(list_transform(generate_series(1, 64), "
     "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
 )
-# same 0..255 quantization as _IMG_QUANT_SQL (defined later in the file —
-# the media fixtures section); duplicated here because oracles are built
-# at module-definition time
-_RECENTER_QUANT_SQL = (
-    "list_transform(embedding::DOUBLE[], x -> CAST(floor("
-    "((least(greatest(x, -1.0), 1.0)) + 1.0) / 2.0 * 255.0 + 0.5) AS BIGINT))"
-)
 
 
 @register(
     "ivf_int_recenter_stats",
     oracle=f"""
     WITH q AS (
-      SELECT vec_id, {_RECENTER_QUANT_SQL} AS qv FROM embeddings
+      SELECT vec_id, {_IMG_QUANT_SQL} AS qv FROM embeddings
     ),
     seeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell_id, qv AS c

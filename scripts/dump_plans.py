@@ -12,6 +12,12 @@ pointing at a git worktree of the pre-round commit for "before".
 SPARK_GRAFT_SF_DIR picks the data (default /root/testdata/sf0.1) so the
 plan (AQE initial plan, join strategies from estimates) matches what the
 bench executes.
+
+Expression ids (``#123``/``#123L``), RDD ids (``MapPartitionsRDD[39]``)
+and exchange ``plan_id``s are allocated per JVM session, so the written
+plans renumber them in order of first appearance (:func:`normalize_ids`).
+Two trees whose plans differ only in those ids then compare equal under
+a plain ``diff -r``.
 """
 
 from __future__ import annotations
@@ -19,6 +25,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.environ.get(
@@ -29,6 +36,27 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("PLAN_OUT", "plans/out")
 SUFFIX = os.environ.get("PLAN_SUFFIX", "")
+
+# (pattern with the id as group 1, placeholder format); one namespace each
+_ID_PATTERNS = (
+    (re.compile(r"#(\d+)"), "#{}"),  # expression ids; an L suffix stays
+    (re.compile(r"(?<=RDD)\[(\d+)\]"), "[{}]"),  # not counts like Output [4]
+    (re.compile(r"(?<=\[plan_id=)(\d+)"), "{}"),  # exchange ids
+)
+
+
+def normalize_ids(plan: str) -> str:
+    """Renumber expression, RDD and plan ids in order of first appearance.
+
+    Each namespace gets its own one-to-one mapping, so plans that differ
+    in wiring still differ after renumbering."""
+    for pattern, fmt in _ID_PATTERNS:
+        seen: dict[str, int] = {}
+        plan = pattern.sub(
+            lambda m: fmt.format(seen.setdefault(m.group(1), len(seen) + 1)),
+            plan,
+        )
+    return plan
 
 
 def main() -> None:
@@ -51,7 +79,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(OUT, f"{name}{SUFFIX}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(normalize_ids(buf.getvalue()))
         print(f"{path}: {len(buf.getvalue())} bytes", flush=True)
 
 

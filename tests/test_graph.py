@@ -6,6 +6,7 @@ import pytest
 
 from network_iq_spark.operators.graph import (
     connected_components,
+    connected_components_of_edges,
     connected_components_two_phase,
 )
 
@@ -192,11 +193,11 @@ def test_cc_max_iter_still_raises(spark):
 
 
 def test_endpoints_only_mode_matches_explicit_vertices(spark):
-    """vertices=None (endpoints-only, the resolution-family shape) must
+    """connected_components_of_edges (the resolution-family shape) must
     label identically to passing the endpoint set explicitly — on a
     graph mixing a long chain (multi-round propagation), a star (the
-    transform-arm shape) and a dense pair, with NO isolated vertices
-    (the mode's contract)."""
+    transform-arm shape) and a dense pair. An edges-only graph has no
+    isolated vertices by construction."""
     edges = spark.createDataFrame(
         [(7, 3), (3, 9), (9, 1), (20, 21), (20, 22), (20, 23), (40, 41), (41, 40)],
         "src bigint, dst bigint",
@@ -210,7 +211,7 @@ def test_endpoints_only_mode_matches_explicit_vertices(spark):
         r.id: r.cluster_id for r in connected_components(endpoints, edges).collect()
     }
     auto = {
-        r.id: r.cluster_id for r in connected_components(None, edges).collect()
+        r.id: r.cluster_id for r in connected_components_of_edges(edges).collect()
     }
     assert auto == explicit
     assert auto == {7: 1, 3: 1, 9: 1, 1: 1, 20: 20, 21: 20, 22: 20, 23: 20, 40: 40, 41: 40}

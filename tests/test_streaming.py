@@ -15,6 +15,24 @@ def source_dir(spark, tmp_path_factory) -> str:
     return p
 
 
+@pytest.fixture(scope="module")
+def daily_files(spark, tmp_path_factory) -> list[str]:
+    """One parquet file per day of ``telemetry_pdf()``, oldest first. The
+    file count is set by the data's time span, not by the core count, and
+    each file is a time slice, so a later file is never late against the
+    watermark an earlier one set."""
+    import os
+
+    root = tmp_path_factory.mktemp("stream_days")
+    pdf = telemetry_pdf()
+    files = []
+    for day, part in pdf.groupby(pdf["timestamp"].dt.date):
+        d = str(root / str(day))
+        spark.createDataFrame(part).coalesce(1).write.parquet(d)
+        files += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    return files
+
+
 def _run_to_memory(stream_df, name: str, mode: str) -> None:
     q = (
         stream_df.writeStream.format("memory")
@@ -66,7 +84,7 @@ def test_tumbling_kpis_match_batch(spark, source_dir):
     assert len(got) == 585  # (120 − 3 open) hourly windows × 5 cells
 
 
-def test_checkpoint_incremental_processing(spark, source_dir, tmp_path):
+def test_checkpoint_incremental_processing(spark, daily_files, tmp_path):
     """Exactly-once file-source semantics: with a checkpoint, a restarted
     query processes ONLY files that arrived since the last run — the
     foundation of incremental ingest at 100 TB."""
@@ -83,11 +101,8 @@ def test_checkpoint_incremental_processing(spark, source_dir, tmp_path):
     import os
 
     os.makedirs(src)
-    files = sorted(
-        f for f in os.listdir(source_dir) if f.endswith(".parquet")
-    )
-    assert len(files) >= 2
-    shutil.copy(os.path.join(source_dir, files[0]), src)
+    assert len(daily_files) >= 2
+    shutil.copy(daily_files[0], src)
 
     def run_once() -> None:
         stream = read_telemetry_stream(spark, src, telemetry_schema())
@@ -108,8 +123,8 @@ def test_checkpoint_incremental_processing(spark, source_dir, tmp_path):
     run_once()
     assert spark.read.parquet(out).count() == n1
     # add the remaining files; restart processes only the delta
-    for f in files[1:]:
-        shutil.copy(os.path.join(source_dir, f), src)
+    for f in daily_files[1:]:
+        shutil.copy(f, src)
     run_once()
     n3 = spark.read.parquet(out).count()
     assert n3 > n1
